@@ -129,7 +129,15 @@ def numeric_byte_matrix(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     batch-insensitive, so build and probe always agree.  (A denormal
     double whose bit pattern equals a small int64 collides with that
     integer key — a ~2^-64 curiosity acceptable in approximate sketches.)
-    NaN must be dropped by the caller (SQL null semantics)."""
+    NaN must be dropped by the caller (SQL null semantics).
+
+    The agg/checkpoint engine reads integer columns as Arrow int64, so
+    only one entry still reaches this rule through pandas:
+    ``streaming.stateful_grouped_sketch`` (its applyInPandasWithState
+    fold has no Arrow form).  There a nullable bigint batch arrives as
+    float64 already, so keys above 2^53 are rounded to the nearest
+    double BEFORE this function sees them: they hash as that rounded
+    neighbour, unlike the same keys on the Arrow build and probe paths."""
     vals = np.ascontiguousarray(values, dtype=np.float64)
     out = vals.view(np.int64).copy()  # default: IEEE bit pattern
     with np.errstate(invalid="ignore"):

@@ -23,11 +23,10 @@ from __future__ import annotations
 import json
 import os
 import time
-from functools import reduce
 
 from pyspark.sql import DataFrame
 
-from .agg import SketchSpec, build_partials
+from .agg import SketchSpec, build_sketch
 
 __all__ = ["StreamingSketch", "StreamingGroupedSketch",
            "stateful_grouped_sketch"]
@@ -49,9 +48,10 @@ def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
     group's running state whenever they arrive (the monoid property —
     no watermark needed for correctness; add one to bound retention)."""
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .agg import _series_values
+    from .agg import _arrow_values
 
     ops = spec.ops
     gcols = list(group_cols)
@@ -67,7 +67,9 @@ def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
         else:
             st, n = spec.create(), 0
         for pdf in pdfs:
-            vals = _series_values(pdf[value_col])
+            # the state-store fold only exists in pandas form; convert
+            # back to Arrow so values hash through the one normaliser
+            vals = _arrow_values(pa.Array.from_pandas(pdf[value_col]))
             st = ops.update(st, vals)
             n += len(vals)
         state.update((ops.serialize(st), n))
@@ -152,18 +154,15 @@ class StreamingSketch:
             return  # replayed micro-batch: already folded in, skip
         t0 = time.perf_counter()
         ops = self.spec.ops
-        rows = build_partials(batch_df, self.col, self.spec).collect()
-        if rows:
-            states = [ops.deserialize(bytes(r["state"])) for r in rows]
-            batch_state = reduce(ops.merge, states)
-            merged = ops.merge(ops.deserialize(self._state_bytes), batch_state)
-            self._state_bytes = ops.serialize(merged)
-            self.n_rows += sum(int(r["n"]) for r in rows)
+        res = build_sketch(batch_df, self.col, self.spec)
+        merged = ops.merge(ops.deserialize(self._state_bytes), res.state)
+        self._state_bytes = ops.serialize(merged)
+        self.n_rows += res.n_rows
         self.last_batch_id = batch_id
         self.batches.append({
             "batch_id": batch_id,
-            "rows": sum(int(r["n"]) for r in rows) if rows else 0,
-            "partials": len(rows),
+            "rows": res.n_rows,
+            "partials": res.num_partials,
             "secs": round(time.perf_counter() - t0, 3),
         })
         self.batches_total += 1

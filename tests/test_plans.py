@@ -93,7 +93,7 @@ def test_mg_verify_filter_pushed_to_scan(spark, sf_test):
 
 
 def test_kmv_partials_zero_shuffle(spark, sf_test):
-    """kmv_bottomk ships only k-entry partials: the ACTUAL mapInPandas stage
+    """kmv_bottomk ships only k-entry partials: the ACTUAL mapInArrow stage
     kmv_bottomk builds (exposed as kmv_partials) runs on the scan
     partitioning with no exchange before it."""
     from sketchlib.agg import kmv_partials
@@ -102,7 +102,7 @@ def test_kmv_partials_zero_shuffle(spark, sf_test):
         F.col("doc_id").cast("string").alias("url"))
     pr = wp.withColumn("prio", F.pmod(F.xxhash64("url"), F.lit(2**40)))
     plan = plan_of(kmv_partials(pr, "url", "prio", 64), "simple")
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Exchange" not in plan
 
 
